@@ -111,7 +111,14 @@ from python_kinesis_streaming_spark.llm.shards import (
     write_tar_shards,
     write_zip_shards,
 )
-from python_kinesis_streaming_spark.llm.similarity import cosine, dot, l2norm
+from python_kinesis_streaming_spark.llm.similarity import (
+    cosine,
+    cosine_of,
+    dot,
+    dot_literal,
+    int8_codes,
+    l2norm,
+)
 from python_kinesis_streaming_spark.llm.warc import read_warc
 from python_kinesis_streaming_spark.sources.avro_codec import (
     read_avro,
@@ -374,10 +381,9 @@ def knn_cosine(df: DataFrame, vec_col: str, query: Sequence[float], k: int = 10)
     TakeOrderedAndProject, zero shuffles."""
     qv = [float(x) for x in query]
     qnorm = sum(x * x for x in qv) ** 0.5
-    d: Column = F.lit(0.0)
-    for i, wgt in enumerate(qv):
-        d = d + F.col(vec_col)[i].cast("double") * F.lit(wgt)
-    sim = d / (l2norm(F.col(vec_col)) * F.lit(qnorm))
+    sim = cosine_of(
+        dot_literal(F.col(vec_col), qv), l2norm(F.col(vec_col)), F.lit(qnorm)
+    )
     return df.withColumn("sim", sim).orderBy(F.desc("sim")).limit(k)
 
 
@@ -495,13 +501,8 @@ def quantize_embeddings(df: DataFrame, vec_col: str) -> DataFrame:
     ``emb_normalize_quantize``): adds ``norm`` (double) and ``qvec``
     (array<long> in [-127,127]). Map-only JVM HOFs — zero shuffles; the
     4× bandwidth cut of ANN index prep."""
-    nrm = l2norm(F.col(vec_col))
-    return df.withColumn("norm", nrm).withColumn(
-        "qvec",
-        F.transform(
-            F.col(vec_col),
-            lambda x: F.floor(x.cast("double") / F.col("norm") * 127.0 + F.lit(0.505)).cast("long"),
-        ),
+    return df.withColumn("norm", l2norm(F.col(vec_col))).withColumn(
+        "qvec", int8_codes(F.col(vec_col), F.col("norm"))
     )
 
 

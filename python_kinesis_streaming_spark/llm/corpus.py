@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.llm.similarity import cosine, cosine_of, top_k
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -251,10 +251,12 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "label")
         .agg(
             rnd(
-                F.sum(F.col("qv").cast("double") * F.col("cv"))
-                / (
-                    F.sqrt(F.sum(F.col("qv").cast("double") * F.col("qv").cast("double")))
-                    * F.sqrt(F.sum(F.col("cv") * F.col("cv")))
+                cosine_of(
+                    F.sum(F.col("qv").cast("double") * F.col("cv")),
+                    F.sqrt(
+                        F.sum(F.col("qv").cast("double") * F.col("qv").cast("double"))
+                    ),
+                    F.sqrt(F.sum(F.col("cv") * F.col("cv"))),
                 ),
                 4,
             ).alias("csim")
@@ -269,8 +271,7 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     qvecs = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qe")
     )
-    w_k = Window.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
+    scored = (
         F.broadcast(best)
         .join(emb, "label")
         .join(F.broadcast(qvecs), "query_id")
@@ -280,10 +281,8 @@ def sim_ivf_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             rnd(cosine(F.col("embedding"), F.col("qe")), 4).alias("sim"),
         )
-        .withColumn("rk", F.row_number().over(w_k))
-        .where(F.col("rk") <= 5)
-        .drop("rk")
     )
+    return top_k(scored, "query_id", [F.desc("sim"), "vec_id"], 5)
 
 
 @op(

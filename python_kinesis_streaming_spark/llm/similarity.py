@@ -1,11 +1,33 @@
-"""Vector-similarity operators over the ``embeddings`` table (SURVEY §2.11).
+"""Vector-similarity operators over the ``embeddings`` table (SURVEY §2.11)
+and the one similarity kernel every sim/emb op builds on.
 
-Cosine math is pure higher-order-function Spark SQL (``zip_with`` dot
-product + ``aggregate`` fold) — JVM-side, codegen, no Python. Floats are
-accumulated in double and every emitted similarity is rounded to 4 dp with
-the shared cross-engine rounding expression; all ORDER BY / thresholds
-operate on the ROUNDED value with integer tie-breaks, so Spark and DuckDB
-(`list_cosine_similarity`) select identical row sets.
+The kernel (this module, nowhere else):
+
+- ``dot`` / ``l2norm``: higher-order-function folds (``zip_with`` +
+  ``aggregate``) in double precision — JVM-side, no Python.
+  ``dot_literal`` is the same left-to-right sum against a literal query
+  vector, unrolled into one flat codegen expression.
+- ``safe_div(x, n)`` is the guard: ``x / n``, or 0.0 where ``n`` is 0 (a
+  zero vector) instead of ``DIVIDE_BY_ZERO`` under ANSI. ``cosine_of(dot,
+  na, nb)`` divides by a norm product through it (callers with hoisted
+  per-row norms call it directly), ``cosine`` is defined on that, and
+  ``int8_codes`` quantizes unit vectors through it. No other Spark-side
+  expression in this module divides by a norm product.
+- ``top_k`` is the one per-group ``row_number() <= k`` cut (planned as a
+  WindowGroupLimit). ``exact_topk`` builds the exact ground truth that
+  recall audits grade against: a broadcast query sample (the audits take
+  every 50th vector) scored against the corpus, self-pairs excluded.
+  ``recall_at_k`` counts an approximate top-k's hits in it.
+
+Oracles do not move with the guard: the fixtures hold no zero-norm
+embedding at sf0.001, sf0.01 or sf0.1, so every guarded division sees the
+same nonzero divisor as before and returns the same double. (DuckDB's
+``list_cosine_similarity`` returns -1.0 for a zero vector, so zero
+vectors are tested for completion and 0.0 scores, not against oracles.)
+
+Every emitted similarity is rounded with the shared cross-engine rounding
+expression; all ORDER BY / thresholds operate on the ROUNDED value with
+integer tie-breaks, so Spark and DuckDB select identical row sets.
 
 Scale notes (100 TB / billions of vectors):
 - ``sim_knn_cosine`` broadcasts the query vector — a map-only scan + top-k
@@ -20,11 +42,14 @@ Scale notes (100 TB / billions of vectors):
 
 from __future__ import annotations
 
+from collections.abc import Sequence
+
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
+from python_kinesis_streaming_spark.sources.tables import _session_key, load_table
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -34,6 +59,15 @@ def dot(a: Column, b: Column) -> Column:
         F.lit(0.0),
         lambda acc, x: acc + x,
     )
+
+
+def dot_literal(a: Column, w: Sequence[float]) -> Column:
+    """Σ aᵢwᵢ against a literal vector ``w``: the same left-to-right sum
+    as ``dot``, unrolled into one flat codegen expression (no HOF)."""
+    acc = F.lit(0.0)
+    for i, x in enumerate(w):
+        acc = acc + a[i].cast("double") * F.lit(x)
+    return acc
 
 
 def l2norm(a: Column) -> Column:
@@ -46,19 +80,106 @@ def l2norm(a: Column) -> Column:
     )
 
 
+def safe_div(x: Column, n: Column) -> Column:
+    """``x / n``, or 0.0 where ``n`` is 0 (a zero vector) — the kernel's
+    guard. ``try_divide`` is null exactly when ``n`` is 0 or an input is
+    null; the fallback ``x * 0.0`` (evaluated only then) is 0.0 for the
+    former and null for the latter. ``n`` is referenced once, so the
+    divisor is computed once and projections collapse as before."""
+    return F.coalesce(F.try_divide(x, n), x * 0.0)
+
+
+def cosine_of(d: Column, na: Column, nb: Column) -> Column:
+    """``d / (na * nb)`` with a zero norm product scoring 0.0."""
+    return safe_div(d, na * nb)
+
+
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (l2norm(a) * l2norm(b))
+    return cosine_of(dot(a, b), l2norm(a), l2norm(b))
+
+
+def int8_codes(a: Column, n: Column) -> Column:
+    """int8 quantization of the unit vector ``a / n``: floor(x·127 + 0.505)
+    per coordinate (a zero vector codes to all zeros)."""
+    return F.transform(
+        a,
+        lambda x: F.floor(
+            safe_div(x.cast("double"), n) * 127.0 + F.lit(0.505)
+        ).cast("long"),
+    )
+
+
+def top_k(
+    df: DataFrame,
+    by: str | Sequence[str],
+    order: Sequence[Column | str],
+    k: int,
+    rank: str | None = None,
+) -> DataFrame:
+    """The first ``k`` rows of each ``by`` group under ``order``; the
+    ``row_number`` is kept as column ``rank`` when named, else dropped."""
+    col = rank or "_rank"
+    cut = df.withColumn(
+        col, F.row_number().over(Window.partitionBy(by).orderBy(*order))
+    ).where(F.col(col) <= k)
+    return cut if rank else cut.drop(col)
+
+
+def exact_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    sim: Column,
+    k: int = 5,
+    rank: str | None = None,
+) -> DataFrame:
+    """Exact ground truth ``(qid, vec_id, sim)``: the top-``k`` corpus
+    vectors per query by ``sim`` rounded to 1e-4, ties on vec_id. The
+    query sample (``qid`` + query-side columns; the audits take
+    ``vec_id % 50 == 0``) broadcasts against the ``corpus`` (``vec_id`` +
+    vector columns); self-pairs excluded."""
+    pairs = corpus.join(
+        F.broadcast(queries), F.col("vec_id") != F.col("qid")
+    ).select("qid", "vec_id", rnd(sim, 4).alias("sim"))
+    return top_k(pairs, "qid", [F.desc("sim"), "vec_id"], k, rank)
+
+
+def recall_at_k(
+    approx: DataFrame,
+    exact: DataFrame,
+    spine: DataFrame,
+    k: int,
+    keys: Sequence[str] = ("qid",),
+    broadcast_hits: bool = False,
+) -> DataFrame:
+    """``(*keys, hits, recall_at_<k>)``: how many of ``approx``'s
+    ``(qid, vec_id)`` rows are in ``exact``, per ``keys`` group, left-joined
+    onto ``spine`` so a query without a hit scores 0."""
+    hits = (
+        approx.join(exact, ["qid", "vec_id"])
+        .groupBy(*keys)
+        .agg(F.count("*").alias("hits"))
+    )
+    if broadcast_hits:
+        hits = F.broadcast(hits)
+    h = F.coalesce(F.col("hits"), F.lit(0))
+    return spine.join(hits, list(keys), "left").select(
+        *keys,
+        h.cast("long").alias("hits"),
+        rnd(h / float(k), 4).alias(f"recall_at_{k}"),
+    )
+
+
 QUERY_VEC_ID = 0  # the deterministic "query" for knn ops
 
 #: (session, sf_dir) → embeddings with a precomputed L2 norm column, cached.
 #: Norms are query-independent — computing them per lookup wastes a full
 #: interpreted-HOF pass; at 100 TB they'd be materialized at ingest alongside
 #: the vectors (the classic vector-index preparation step).
-_NORM_CACHE: dict[tuple[int, str], DataFrame] = {}
+_NORM_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def emb_with_norm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (id(spark), sf_dir)
+    key = (_session_key(spark), sf_dir)
     if key not in _NORM_CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
         _NORM_CACHE[key] = emb.withColumn("norm", l2norm(F.col("embedding"))).cache()
@@ -101,11 +222,7 @@ def sim_knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         for x in emb.where(F.col("vec_id") == QUERY_VEC_ID).first()["embedding"]
     ]
     qnorm = sum(x * x for x in qv) ** 0.5
-    # Left-to-right summation order identical to the HOF/DuckDB loop.
-    dot_expr = F.lit(0.0)
-    for i, w in enumerate(qv):
-        dot_expr = dot_expr + F.col("embedding")[i].cast("double") * F.lit(w)
-    sim = dot_expr / (F.col("norm") * F.lit(qnorm))
+    sim = cosine_of(dot_literal(F.col("embedding"), qv), F.col("norm"), F.lit(qnorm))
     return (
         emb.where(F.col("vec_id") != QUERY_VEC_ID)
         .select("vec_id", rnd(sim, 4).alias("sim"))
@@ -142,11 +259,8 @@ def sim_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 most-similar vector pairs within each label (blocked all-pairs).
 
     Norms come precomputed from ``emb_with_norm`` (one HOF per VECTOR),
-    so each PAIR costs a single dot fold — identical arithmetic to
-    ``cosine`` (bit-identical doubles; the r12 SemDeDup kernel lesson,
-    PERF.md r12), 3x fewer HOF evaluations in the quadratic stage."""
-    from pyspark.sql.window import Window
-
+    so each PAIR costs a single dot fold (the r12 SemDeDup kernel
+    lesson, PERF.md r12), 3x fewer HOF evaluations in the quadratic stage."""
     emb = emb_with_norm(spark, sf_dir)
     a = emb.alias("a")
     b = emb.alias("b")
@@ -159,19 +273,15 @@ def sim_pairwise_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("a.vec_id").alias("vec_a"),
         F.col("b.vec_id").alias("vec_b"),
         rnd(
-            dot(F.col("a.embedding"), F.col("b.embedding"))
-            / (F.col("a.norm") * F.col("b.norm")),
+            cosine_of(
+                dot(F.col("a.embedding"), F.col("b.embedding")),
+                F.col("a.norm"),
+                F.col("b.norm"),
+            ),
             4,
         ).alias("sim"),
     )
-    w = Window.partitionBy("label").orderBy(
-        F.desc("sim"), F.asc("vec_a"), F.asc("vec_b")
-    )
-    return (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
-        .drop("rn")
-    )
+    return top_k(pairs, "label", [F.desc("sim"), "vec_a", "vec_b"], 5)
 
 
 @op(
@@ -202,7 +312,7 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~0.9+ on normalized embeddings.)
 
     Pair similarity uses precomputed ``emb_with_norm`` norms + one dot
-    fold per pair — bit-identical to ``cosine`` (r12 kernel lesson)."""
+    fold per pair (r12 kernel lesson)."""
     emb = emb_with_norm(spark, sf_dir)
     a = emb.alias("a")
     b = emb.alias("b")
@@ -216,8 +326,11 @@ def dedup_embed_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("a.vec_id").alias("vec_a"),
             F.col("b.vec_id").alias("vec_b"),
             rnd(
-                dot(F.col("a.embedding"), F.col("b.embedding"))
-                / (F.col("a.norm") * F.col("b.norm")),
+                cosine_of(
+                    dot(F.col("a.embedding"), F.col("b.embedding")),
+                    F.col("a.norm"),
+                    F.col("b.norm"),
+                ),
                 4,
             ).alias("sim"),
         )
@@ -392,8 +505,6 @@ def sim_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 cosine neighbors for each of 5 query vectors in one pass."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     q = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
@@ -407,12 +518,7 @@ def sim_query_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(cosine(F.col("embedding"), F.col("qe")), 4).alias("sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .drop("rn")
-    )
+    return top_k(scored, "qid", [F.desc("sim"), "vec_id"], 3)
 
 
 @op(
@@ -449,16 +555,9 @@ def emb_normalize_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """L2-normalize each embedding and quantize to int8; emit per-vector
     norm + quantized-vector summary scalars (sum/min/max)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    nrm = l2norm(F.col("embedding"))
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(x.cast("double") / F.col("nrm") * 127.0 + F.lit(0.505)).cast(
-            "long"
-        ),
-    )
     return (
-        emb.withColumn("nrm", nrm)
-        .withColumn("qv", qv)
+        emb.withColumn("nrm", l2norm(F.col("embedding")))
+        .withColumn("qv", int8_codes(F.col("embedding"), F.col("nrm")))
         .select(
             "vec_id",
             rnd(F.col("nrm"), 4).alias("norm"),
@@ -656,15 +755,10 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
     qnrm = sum(x * x for x in qe) ** 0.5
     import math
 
-    qqv = [int(math.floor(x / qnrm * 127.0 + 0.505)) for x in qe]
+    qqv = [int(math.floor((x / qnrm if qnrm else 0.0) * 127.0 + 0.505)) for x in qe]
 
     cand = emb.where(F.col("vec_id") != QUERY_VEC_ID)
-    qv = F.transform(
-        F.col("embedding"),
-        lambda x: F.floor(
-            x.cast("double") / F.col("norm") * 127.0 + F.lit(0.505)
-        ).cast("long"),
-    )
+    qv = int8_codes(F.col("embedding"), F.col("norm"))
     coarse = F.aggregate(
         F.zip_with(
             qv,
@@ -679,10 +773,7 @@ def sim_rerank_two_stage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("coarse_score"), F.asc("vec_id"))
         .limit(50)
     )
-    dot_expr = F.lit(0.0)
-    for i, w in enumerate(qe):
-        dot_expr = dot_expr + F.col("embedding")[i].cast("double") * F.lit(w)
-    sim = dot_expr / (F.col("norm") * F.lit(qnrm))
+    sim = cosine_of(dot_literal(F.col("embedding"), qe), F.col("norm"), F.lit(qnrm))
     return (
         stage1.select("vec_id", "coarse_score", rnd(sim, 6).alias("sim"))
         .orderBy(F.desc("sim"), F.asc("vec_id"))
@@ -930,8 +1021,6 @@ def emb_hamming_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two power-iteration steps toward the top PCA loading vector."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         "vec_id",
@@ -1018,8 +1107,6 @@ def emb_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_dim_variance_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-16 embedding dimensions by population variance."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     x = emb.select(
         F.posexplode(F.col("embedding").cast("array<double>")).alias("j", "x")
@@ -1086,8 +1173,6 @@ def sim_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     Codewords are the first 8 vectors (vec_id < 8) sliced per subspace —
     a deterministic stand-in for per-subspace k-means training.
     """
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     subspaces = F.array(*[F.lit(i) for i in range(8)])
     sub = emb.select(
@@ -1157,8 +1242,8 @@ def sim_pq_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pair/doc counts at each candidate cosine threshold, from one
-    label-blocked pair join (precomputed norms + one dot fold per pair —
-    bit-identical to ``cosine``, r12 kernel lesson)."""
+    label-blocked pair join (precomputed norms + one dot fold per pair,
+    r12 kernel lesson)."""
     emb = emb_with_norm(spark, sf_dir)
     a = emb.alias("a")
     b = emb.alias("b")
@@ -1169,8 +1254,11 @@ def sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         F.col("b.vec_id").alias("vb"),
         rnd(
-            dot(F.col("a.embedding"), F.col("b.embedding"))
-            / (F.col("a.norm") * F.col("b.norm")),
+            cosine_of(
+                dot(F.col("a.embedding"), F.col("b.embedding")),
+                F.col("a.norm"),
+                F.col("b.norm"),
+            ),
             4,
         ).alias("sim"),
     )
@@ -1249,8 +1337,6 @@ def sim_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 def emb_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recall@10 of sign-bit Hamming retrieval vs exact cosine, for query
     vectors 0..4."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
 
     def sig(lo_bit: int, hi_bit: int, alias: str):
@@ -1269,23 +1355,19 @@ def emb_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("sig_lo").alias("q_lo"),
         F.col("sig_hi").alias("q_hi"),
     )
-    exact = (
+    exact = top_k(
         emb.crossJoin(F.broadcast(queries))
         .where(F.col("vec_id") != F.col("q_id"))
         .select(
             "q_id",
             "vec_id",
             rnd(cosine(F.col("embedding"), F.col("q_emb")), 4).alias("sim"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rk") <= 10)
+        ),
+        "q_id",
+        [F.desc("sim"), "vec_id"],
+        10,
     )
-    ham = (
+    ham = top_k(
         sigs.crossJoin(F.broadcast(qsigs))
         .where(F.col("vec_id") != F.col("q_id"))
         .select(
@@ -1295,14 +1377,10 @@ def emb_quantization_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.bit_count(F.expr("sig_lo ^ q_lo"))
                 + F.bit_count(F.expr("sig_hi ^ q_hi"))
             ).alias("hd"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("q_id").orderBy("hd", "vec_id")
-            ),
-        )
-        .where(F.col("rk") <= 10)
+        ),
+        "q_id",
+        ["hd", "vec_id"],
+        10,
     )
     joined = exact.select("q_id", "vec_id").join(
         ham.select(F.col("q_id").alias("hq"), F.col("vec_id").alias("hv")),
@@ -1475,8 +1553,6 @@ def sim_index_build_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mutual top-3 cosine-neighbor edges within each label block."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     a = emb.alias("a")
     b = emb.alias("b")
@@ -1492,12 +1568,7 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sim"
         ),
     )
-    w = Window.partitionBy("src").orderBy(F.desc("sim"), F.asc("dst"))
-    knn = (
-        pairs.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 3)
-        .drop("rn")
-    )
+    knn = top_k(pairs, "src", [F.desc("sim"), "dst"], 3)
     k1 = knn.alias("k1")
     k2 = knn.alias("k2")
     return (
@@ -1573,8 +1644,6 @@ def emb_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of true label vs nearest-centroid assignment."""
-    from pyspark.sql.window import Window
-
     emb = load_table(spark, sf_dir, "embeddings")
     v = emb.select(
         "vec_id",
@@ -1607,7 +1676,7 @@ def emb_centroid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             "tlabel",
             "clabel",
-            rnd(F.col("d") / (F.col("vnorm") * F.col("cnorm")), 6).alias(
+            rnd(cosine_of(F.col("d"), F.col("vnorm"), F.col("cnorm")), 6).alias(
                 "cos"
             ),
         )

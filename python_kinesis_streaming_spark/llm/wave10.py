@@ -389,8 +389,9 @@ def text_ql_dirichlet_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RRF top-10 fusing lexical-Jaccard and cosine legs for doc 0."""
     from python_kinesis_streaming_spark.llm.similarity import (
-        emb_with_norm,
+        cosine_of,
         dot,
+        emb_with_norm,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -440,8 +441,11 @@ def sim_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("doc_id"),
             rnd(
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("norm") * F.col("qnorm")),
+                cosine_of(
+                    dot(F.col("embedding"), F.col("qv")),
+                    F.col("norm"),
+                    F.col("qnorm"),
+                ),
                 4,
             ).alias("sim"),
         )
@@ -540,8 +544,10 @@ def sim_negative_mining_audit(
     """Top-5 semi-hard negatives per 1-in-50 anchor (other-label,
     cosine in [0.20, 0.35))."""
     from python_kinesis_streaming_spark.llm.similarity import (
-        emb_with_norm,
+        cosine_of,
         dot,
+        emb_with_norm,
+        top_k,
     )
 
     emb = emb_with_norm(spark, sf_dir)
@@ -563,17 +569,18 @@ def sim_negative_mining_audit(
             "vec_id",
             F.col("label").alias("label_n"),
             rnd(
-                dot(F.col("embedding"), F.col("qv"))
-                / (F.col("norm") * F.col("qnorm")),
+                cosine_of(
+                    dot(F.col("embedding"), F.col("qv")),
+                    F.col("norm"),
+                    F.col("qnorm"),
+                ),
                 4,
             ).alias("sim"),
         )
     )
     semi = cand.where((F.col("sim") >= 0.20) & (F.col("sim") < 0.35))
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("vec_id"))
     return (
-        semi.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= 5)
+        top_k(semi, "qid", [F.desc("sim"), "vec_id"], 5)
         .select(
             "qid",
             "vec_id",

@@ -427,7 +427,13 @@ def dq_label_noise_confident(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 / MRR / nDCG@10 of the truncated-dims prefilter
     ranking vs the exact cosine top-10, per sampled query."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        exact_topk,
+        l2norm,
+        top_k,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -456,7 +462,7 @@ def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("xq") * F.col("x")).alias("tdot"))
     )
     nq, nv = tn.alias("nq"), tn.alias("nv")
-    atop = (
+    ts = (
         td.alias("td")
         .join(nq, F.col("nq.vec_id") == F.col("td.qid"))
         .join(nv, F.col("nv.vec_id") == F.col("td.vec_id"))
@@ -464,21 +470,13 @@ def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("td.qid").alias("qid"),
             F.col("td.vec_id").alias("vec_id"),
             rnd(
-                F.col("td.tdot") / (F.col("nq.tn") * F.col("nv.tn")), 4
+                cosine_of(F.col("td.tdot"), F.col("nq.tn"), F.col("nv.tn")), 4
             ).alias("tsim"),
         )
-        .withColumn(
-            "arank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("tsim"), "vec_id")
-            ),
-        )
-        .where(F.col("arank") <= 10)
-        .select("qid", "vec_id", "arank")
     )
-    # per-ROW norms hoisted out of the per-PAIR kernel (the r12
-    # SemDeDup lesson): one HOF per pair instead of three,
-    # bit-identical doubles, oracle untouched
+    atop = top_k(ts, "qid", [F.desc("tsim"), "vec_id"], 10, "arank").select(
+        "qid", "vec_id", "arank"
+    )
     embn = emb.withColumn("norm", l2norm(F.col("v")))
     eq = embn.select(
         F.col("vec_id").alias("qid"),
@@ -486,27 +484,13 @@ def sim_rank_quality_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("norm").alias("qnorm"),
     )
     q = eq.where(F.col("qid") % 50 == 0)
-    ex = embn.join(
-        F.broadcast(q), F.col("vec_id") != F.col("qid")
-    ).select(
-        "qid",
-        "vec_id",
-        rnd(
-            dot(F.col("qv"), F.col("v"))
-            / (F.col("qnorm") * F.col("norm")),
-            4,
-        ).alias("sim"),
-    )
-    etop = (
-        ex.withColumn(
-            "erank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("erank") <= 10)
-        .select("qid", "vec_id", "erank")
-    )
+    etop = exact_topk(
+        embn,
+        q,
+        cosine_of(dot(F.col("qv"), F.col("v")), F.col("qnorm"), F.col("norm")),
+        10,
+        "erank",
+    ).select("qid", "vec_id", "erank")
     log2_arank = F.log(F.col("arank") + F.lit(1.0)) / F.log(F.lit(2.0))
     terms = atop.join(etop, ["qid", "vec_id"], "left").select(
         "qid",

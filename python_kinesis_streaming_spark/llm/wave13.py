@@ -414,6 +414,8 @@ def sim_distance_contrast_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-query min/mean/max squared distance + relative contrast."""
+    from python_kinesis_streaming_spark.llm.similarity import dot
+
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
@@ -428,15 +430,11 @@ def sim_distance_contrast_audit(
         F.col("v").alias("qv"),
         F.col("n2").alias("qn2"),
     ).where(F.col("qid") % 50 == 0)
-    dot = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("v"), lambda a, b: a * b),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     d = e.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
         "qid",
         F.floor(
-            (F.col("qn2") + F.col("n2") - 2 * dot) * F.lit(1000000.0)
+            (F.col("qn2") + F.col("n2") - 2 * dot(F.col("qv"), F.col("v")))
+            * F.lit(1000000.0)
             + F.lit(0.505)
         )
         .cast("long")

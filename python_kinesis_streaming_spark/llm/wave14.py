@@ -38,7 +38,6 @@ bounded candidate sets everywhere.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
@@ -650,7 +649,12 @@ def ts_croston_intermittent(
 def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-hop beam-8 graph search recall@5 vs the exact in-cell
     top-5, per sampled query."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        recall_at_k,
+        top_k,
+    )
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )
@@ -664,28 +668,20 @@ def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a, b = e.alias("a"), e.alias("b")
     sim_ab = rnd(
-        dot(F.col("a.v"), F.col("b.v"))
-        / (F.col("a.norm") * F.col("b.norm")),
+        cosine_of(dot(F.col("a.v"), F.col("b.v")), F.col("a.norm"), F.col("b.norm")),
         4,
     )
+    ab = a.join(
+        b,
+        (F.col("b.cid") == F.col("a.cid"))
+        & (F.col("b.vec_id") != F.col("a.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("src"),
+        F.col("b.vec_id").alias("dst"),
+        sim_ab.alias("s"),
+    )
     edges = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 8)
+        top_k(ab, "src", [F.desc("s"), "dst"], 8)
         .select("src", "dst")
         .localCheckpoint(eager=True)
     )
@@ -701,32 +697,20 @@ def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("vec_id").alias("node"))
     )
 
+    sim_q = rnd(
+        cosine_of(dot(F.col("v"), F.col("qv")), F.col("norm"), F.col("qnorm")),
+        4,
+    )
+
     def rescore_top(frontier: DataFrame, k: int) -> DataFrame:
         scored = (
             frontier.join(e, F.col("vec_id") == F.col("node"))
             .join(q, "qid")
             .where(F.col("node") != F.col("qid"))
-            .select(
-                "qid",
-                "node",
-                rnd(
-                    dot(F.col("v"), F.col("qv"))
-                    / (F.col("norm") * F.col("qnorm")),
-                    4,
-                ).alias("s"),
-            )
+            .select("qid", "node", sim_q.alias("s"))
         )
-        return (
-            scored.withColumn(
-                "rk",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("s"), "node"
-                    )
-                ),
-            )
-            .where(F.col("rk") <= k)
-            .select("qid", "node")
+        return top_k(scored, "qid", [F.desc("s"), "node"], k).select(
+            "qid", "node"
         )
 
     f1 = entry.select("qid", "node").unionByName(
@@ -741,43 +725,17 @@ def sim_graph_beam_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).distinct()
     beam = rescore_top(f2, 5)
-    ex = (
+    # exact ground truth is the in-cell ranking: the query's own cell only
+    ex = top_k(
         q.join(
             e,
             (F.col("cid") == F.col("qcid"))
             & (F.col("vec_id") != F.col("qid")),
-        )
-        .select(
-            "qid",
-            "vec_id",
-            rnd(
-                dot(F.col("v"), F.col("qv"))
-                / (F.col("norm") * F.col("qnorm")),
-                4,
-            ).alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("s"), "vec_id")
-            ),
-        )
-        .where(F.col("rk") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        beam.join(ex, (beam.qid == ex.qid) & (beam.node == ex.vec_id))
-        .groupBy(beam.qid)
-        .agg(F.count(F.lit(1)).cast("long").alias("hits"))
-    )
-    return (
-        q.select("qid")
-        .join(h, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(
-                F.coalesce(F.col("hits"), F.lit(0)) / F.lit(5.0), 4
-            ).alias("recall_at_5"),
-        )
+        ).select("qid", "vec_id", sim_q.alias("s")),
+        "qid",
+        [F.desc("s"), "vec_id"],
+        5,
+    ).select("qid", "vec_id")
+    return recall_at_k(
+        beam.withColumnRenamed("node", "vec_id"), ex, q.select("qid"), 5
     )

@@ -229,7 +229,11 @@ def events_power_analysis_mde(
 )
 def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-occurrence skewness + antihub rate over in-cell 10-NN lists."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        top_k,
+    )
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )
@@ -238,30 +242,23 @@ def sim_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = assigned.select("vec_id", "cid", "embedding", "norm")
     a, b = e.alias("a"), e.alias("b")
     sim_ab = rnd(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.norm") * F.col("b.norm")),
+        cosine_of(
+            dot(F.col("a.embedding"), F.col("b.embedding")),
+            F.col("a.norm"),
+            F.col("b.norm"),
+        ),
         4,
     )
-    edges = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 10)
-        .select("src", "dst")
+    ab = a.join(
+        b,
+        (F.col("b.cid") == F.col("a.cid"))
+        & (F.col("b.vec_id") != F.col("a.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("src"),
+        F.col("b.vec_id").alias("dst"),
+        sim_ab.alias("s"),
     )
+    edges = top_k(ab, "src", [F.desc("s"), "dst"], 10).select("src", "dst")
     k = edges.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("c"))
     kocc = (
         e.select("vec_id")

@@ -426,7 +426,11 @@ def graph_adamic_adar_linkpred(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Top-20 Adamic-Adar predicted links on the in-cell 8-NN graph."""
-    from python_kinesis_streaming_spark.llm.similarity import dot
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        top_k,
+    )
     from python_kinesis_streaming_spark.llm.wave7 import (
         _semdedup_assigned_pairs,
     )
@@ -435,30 +439,23 @@ def graph_adamic_adar_linkpred(
     e = assigned.select("vec_id", "cid", "embedding", "norm")
     a, b = e.alias("a"), e.alias("b")
     sim_ab = rnd(
-        dot(F.col("a.embedding"), F.col("b.embedding"))
-        / (F.col("a.norm") * F.col("b.norm")),
+        cosine_of(
+            dot(F.col("a.embedding"), F.col("b.embedding")),
+            F.col("a.norm"),
+            F.col("b.norm"),
+        ),
         4,
     )
-    knn = (
-        a.join(
-            b,
-            (F.col("b.cid") == F.col("a.cid"))
-            & (F.col("b.vec_id") != F.col("a.vec_id")),
-        )
-        .select(
-            F.col("a.vec_id").alias("src"),
-            F.col("b.vec_id").alias("dst"),
-            sim_ab.alias("s"),
-        )
-        .withColumn(
-            "rk",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("s"), "dst")
-            ),
-        )
-        .where(F.col("rk") <= 8)
-        .select("src", "dst")
+    ab = a.join(
+        b,
+        (F.col("b.cid") == F.col("a.cid"))
+        & (F.col("b.vec_id") != F.col("a.vec_id")),
+    ).select(
+        F.col("a.vec_id").alias("src"),
+        F.col("b.vec_id").alias("dst"),
+        sim_ab.alias("s"),
     )
+    knn = top_k(ab, "src", [F.desc("s"), "dst"], 8).select("src", "dst")
     und = knn.unionByName(
         knn.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct()

@@ -32,7 +32,13 @@ from python_kinesis_streaming_spark.llm.dedup import (
     minhash_signatures,
     word_shingles,
 )
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.llm.similarity import (
+    cosine,
+    cosine_of,
+    exact_topk,
+    recall_at_k,
+    top_k,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -314,37 +320,13 @@ def sim_ivf_nprobe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     lc = cand.withColumn("nprobe", levels).where(
         F.col("probe_rank") <= F.col("nprobe")
     )
-    atop = (
-        lc.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("nprobe", "qid").orderBy(
-                    F.desc("sim"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("nprobe", "qid", "vec_id")
+    atop = top_k(lc, ["nprobe", "qid"], [F.desc("sim"), "vec_id"], 5).select(
+        "nprobe", "qid", "vec_id"
     )
     q = tagged.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
-    ex = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select(
-            "qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim")
-        )
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
+    etop = exact_topk(emb, q, cosine(F.col("qv"), F.col("v")))
     candn = lc.groupBy("nprobe", "qid").agg(F.count("*").alias("cand_n"))
     hits = (
         atop.join(etop, ["qid", "vec_id"])
@@ -506,20 +488,13 @@ def sim_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("td.qid").alias("qid"),
             F.col("td.vec_id").alias("vec_id"),
-            rnd(F.col("td.tdot") / (F.col("nq.tn") * F.col("nv.tn")), 4).alias(
-                "tsim"
-            ),
+            rnd(
+                cosine_of(F.col("td.tdot"), F.col("nq.tn"), F.col("nv.tn")), 4
+            ).alias("tsim"),
         )
     )
-    cand = (
-        ts.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("tsim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 50)
-        .select("qid", "vec_id")
+    cand = top_k(ts, "qid", [F.desc("tsim"), "vec_id"], 50).select(
+        "qid", "vec_id"
     )
     eq = emb.select(F.col("vec_id").alias("qid"), F.col("v").alias("qv"))
     rr = (
@@ -527,47 +502,10 @@ def sim_cascade_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(emb, "vec_id")
         .select("qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"))
     )
-    rtop = (
-        rr.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
+    rtop = top_k(rr, "qid", [F.desc("sim"), "vec_id"], 5).select("qid", "vec_id")
     q = eq.where(F.col("qid") % 50 == 0)
-    ex = (
-        emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid"))
-        .select("qid", "vec_id", rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"))
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        rtop.join(etop, ["qid", "vec_id"])
-        .groupBy("qid")
-        .agg(F.count("*").alias("hits"))
-    )
-    return (
-        q.select("qid")
-        .join(h, "qid", "left")
-        .select(
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(F.coalesce(F.col("hits"), F.lit(0)) / 5.0, 4).alias(
-                "recall_at_5"
-            ),
-        )
-    )
+    etop = exact_topk(emb, q, cosine(F.col("qv"), F.col("v")))
+    return recall_at_k(rtop, etop, q.select("qid"), 5)
 
 
 # ---------------------------------------------------------------------------
@@ -1137,10 +1075,10 @@ def emb_shard_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             rnd(
-                F.sum(F.col("a.c") * F.col("b.c"))
-                / (
-                    F.sqrt(F.sum(F.col("a.c") * F.col("a.c")))
-                    * F.sqrt(F.sum(F.col("b.c") * F.col("b.c")))
+                cosine_of(
+                    F.sum(F.col("a.c") * F.col("b.c")),
+                    F.sqrt(F.sum(F.col("a.c") * F.col("a.c"))),
+                    F.sqrt(F.sum(F.col("b.c") * F.col("b.c"))),
                 ),
                 4,
             ).alias("cos_sim")

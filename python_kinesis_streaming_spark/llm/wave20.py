@@ -594,7 +594,12 @@ def emb_sign_binarize_recall(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Recall@10 of 64-bit sign-Hamming retrieval vs exact cosine."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        l2norm,
+        top_k,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -639,8 +644,7 @@ def emb_sign_binarize_recall(
         # vs 11 s — PERF.md r14): the fold's tight loop beats 64
         # codegen'd array probes. Don't re-try the unroll.
         rnd(
-            dot(F.col("qv"), F.col("v"))
-            / (F.col("qnrm") * F.col("nrm")),
+            cosine_of(dot(F.col("qv"), F.col("v")), F.col("qnrm"), F.col("nrm")),
             4,
         ).alias("sim"),
     )
@@ -651,19 +655,11 @@ def emb_sign_binarize_recall(
     # measured 12x slower than the HOF fold (134 s vs 11 s). The 7.4x
     # ratio is the interpreted-HOF floor of the sample-bounded exact
     # leg; production fixes the query budget so it stays linear.
-    wq_sim = Window.partitionBy("qid").orderBy(F.desc("sim"), "cid")
-    wq_ham = Window.partitionBy("qid").orderBy(F.asc("ham"), "cid")
-    exact_top = (
-        pairs.withColumn("rk", F.row_number().over(wq_sim))
-        .where(F.col("rk") <= 10)
-        .select("qid", "cid")
+    exact_top = top_k(pairs, "qid", [F.desc("sim"), "cid"], 10).select(
+        "qid", "cid"
     )
-    ham_top = (
-        pairs.withColumn("rk", F.row_number().over(wq_ham))
-        .where(F.col("rk") <= 10)
-        .select(
-            F.col("qid").alias("hqid"), F.col("cid").alias("hcid")
-        )
+    ham_top = top_k(pairs, "qid", ["ham", "cid"], 10).select(
+        F.col("qid").alias("hqid"), F.col("cid").alias("hcid")
     )
     return (
         exact_top.join(

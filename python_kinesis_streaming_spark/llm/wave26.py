@@ -351,7 +351,11 @@ def emb_triplet_margin_audit(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
     """Per-cell best-pos vs best-neg cosine margins for anchors."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        l2norm,
+    )
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
@@ -384,8 +388,7 @@ def emb_triplet_margin_audit(
         "alabel",
         F.col("label").alias("clabel"),
         rnd(
-            dot(F.col("av"), F.col("v"))
-            / (F.col("anrm") * F.col("nrm")),
+            cosine_of(dot(F.col("av"), F.col("v")), F.col("anrm"), F.col("nrm")),
             4,
         ).alias("sim"),
     )

@@ -41,7 +41,14 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+from python_kinesis_streaming_spark.llm.similarity import (
+    cosine_of,
+    dot,
+    exact_topk,
+    l2norm,
+    recall_at_k,
+    top_k,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -294,29 +301,20 @@ def sim_cascade_sketch_recall_audit(
                 "qid",
                 "vec_id",
                 rnd(
-                    dot(F.col("arr"), F.col("qarr"))
-                    / (F.col("nnq") * F.col("nn")),
+                    cosine_of(
+                        dot(F.col("arr"), F.col("qarr")),
+                        F.col("nnq"),
+                        F.col("nn"),
+                    ),
                     4,
                 ).alias("tsim"),
             )
         )
-        return (
-            pairs.withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("tsim"), "vec_id"
-                    )
-                ),
-            )
-            .where(F.col("rank") <= 50)
-            .select(F.lit(tag).alias("prefilter"), "qid", "vec_id")
+        return top_k(pairs, "qid", [F.desc("tsim"), "vec_id"], 50).select(
+            F.lit(tag).alias("prefilter"), "qid", "vec_id"
         )
 
     cand = leg_cand("randproj16").unionByName(leg_cand("sketch16"))
-    # Norm-hoist (r15, the wave-7 kernel): per-pair cosine = dot/(nq·nv)
-    # with per-row norms computed once — identical arithmetic, one HOF
-    # per pair instead of three.
     embn = emb.withColumn("nv", l2norm(F.col("v"))).repartition(
         fan, "vec_id"
     )
@@ -325,70 +323,25 @@ def sim_cascade_sketch_recall_audit(
         F.col("v").alias("qv"),
         F.col("nv").alias("nq"),
     )
+    sim = cosine_of(dot(F.col("qv"), F.col("v")), F.col("nq"), F.col("nv"))
     rr = (
         embn.join(F.broadcast(cand), "vec_id")
         .join(F.broadcast(eq), "qid")
-        .select(
-            "prefilter",
-            "qid",
-            "vec_id",
-            rnd(
-                dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-                4,
-            ).alias("sim"),
-        )
+        .select("prefilter", "qid", "vec_id", rnd(sim, 4).alias("sim"))
     )
-    rtop = (
-        rr.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("prefilter", "qid").orderBy(
-                    F.desc("sim"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("prefilter", "qid", "vec_id")
-    )
+    rtop = top_k(rr, ["prefilter", "qid"], [F.desc("sim"), "vec_id"], 5)
     q = eq.where(F.col("qid") % 50 == 0)
-    ex = embn.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        rnd(
-            dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-            4,
-        ).alias("sim"),
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        rtop.join(F.broadcast(etop), ["qid", "vec_id"])
-        .groupBy("prefilter", "qid")
-        .agg(F.count("*").alias("hits"))
-    )
+    etop = exact_topk(embn, q, sim).select("qid", "vec_id")
     legs = spark.createDataFrame(
         [("randproj16",), ("sketch16",)], "prefilter string"
     )
-    return (
-        q.select("qid")
-        .crossJoin(F.broadcast(legs))
-        .join(F.broadcast(h), ["prefilter", "qid"], "left")
-        .select(
-            "prefilter",
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            rnd(F.coalesce(F.col("hits"), F.lit(0)) / 5.0, 4).alias(
-                "recall_at_5"
-            ),
-        )
+    return recall_at_k(
+        rtop,
+        F.broadcast(etop),
+        q.select("qid").crossJoin(F.broadcast(legs)),
+        5,
+        ["prefilter", "qid"],
+        broadcast_hits=True,
     )
 
 

@@ -24,7 +24,16 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine, dot, l2norm
+from python_kinesis_streaming_spark.llm.similarity import (
+    cosine,
+    cosine_of,
+    dot,
+    exact_topk,
+    l2norm,
+    recall_at_k,
+    safe_div,
+    top_k,
+)
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -332,27 +341,17 @@ def sim_prefilter_quality_report(
                 "qid",
                 "vec_id",
                 rnd(
-                    F.when(
-                        F.col("nnq") * F.col("nn") == 0, F.lit(0.0)
-                    ).otherwise(
-                        dot(F.col("arr"), F.col("qarr"))
-                        / (F.col("nnq") * F.col("nn"))
+                    cosine_of(
+                        dot(F.col("arr"), F.col("qarr")),
+                        F.col("nnq"),
+                        F.col("nn"),
                     ),
                     4,
                 ).alias("tsim"),
             )
         )
-        return (
-            pairs.withColumn(
-                "rank",
-                F.row_number().over(
-                    Window.partitionBy("qid").orderBy(
-                        F.desc("tsim"), "vec_id"
-                    )
-                ),
-            )
-            .where(F.col("rank") <= 50)
-            .select(F.lit(tag).alias("prefilter"), "qid", "vec_id")
+        return top_k(pairs, "qid", [F.desc("tsim"), "vec_id"], 50).select(
+            F.lit(tag).alias("prefilter"), "qid", "vec_id"
         )
 
     cand = (
@@ -360,11 +359,6 @@ def sim_prefilter_quality_report(
         .unionByName(leg_cand("sketch16"))
         .unionByName(leg_cand("variance16"))
     )
-    # Norm-hoist (r15, the wave-7 kernel): per-pair cosine drops from
-    # three interpreted HOFs (zip_with dot + two norms) to one — the dot —
-    # with the norms computed once per row. dot/(nq·nv) is the IDENTICAL
-    # arithmetic to the cosine helper (same index-order fold, same
-    # sqrt-product), so the doubles are bit-identical.
     embn = emb.withColumn("nv", l2norm(F.col("v"))).repartition(
         fan, "vec_id"
     )
@@ -373,68 +367,25 @@ def sim_prefilter_quality_report(
         F.col("v").alias("qv"),
         F.col("nv").alias("nq"),
     )
+    sim = cosine_of(dot(F.col("qv"), F.col("v")), F.col("nq"), F.col("nv"))
     rr = (
         cand.join(F.broadcast(eq), "qid")
         .join(embn, "vec_id")
-        .select(
-            "prefilter",
-            "qid",
-            "vec_id",
-            rnd(
-                dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-                4,
-            ).alias("sim"),
-        )
+        .select("prefilter", "qid", "vec_id", rnd(sim, 4).alias("sim"))
     )
-    rtop = (
-        rr.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("prefilter", "qid").orderBy(
-                    F.desc("sim"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("prefilter", "qid", "vec_id")
-    )
+    rtop = top_k(rr, ["prefilter", "qid"], [F.desc("sim"), "vec_id"], 5)
     q = eq.where(F.col("qid") % 50 == 0)
-    ex = embn.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        rnd(
-            dot(F.col("qv"), F.col("v")) / (F.col("nq") * F.col("nv")),
-            4,
-        ).alias("sim"),
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("qid").orderBy(F.desc("sim"), "vec_id")
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("qid", "vec_id")
-    )
-    h = (
-        rtop.join(etop, ["qid", "vec_id"])
-        .groupBy("prefilter", "qid")
-        .agg(F.count("*").alias("hits"))
-    )
+    etop = exact_topk(embn, q, sim).select("qid", "vec_id")
     legs = spark.createDataFrame(
         [("randproj16",), ("sketch16",), ("variance16",)],
         "prefilter string",
     )
-    perq = (
-        q.select("qid")
-        .crossJoin(F.broadcast(legs))
-        .join(h, ["prefilter", "qid"], "left")
-        .select(
-            "prefilter",
-            "qid",
-            F.coalesce(F.col("hits"), F.lit(0)).alias("hits"),
-        )
+    perq = recall_at_k(
+        rtop,
+        etop,
+        q.select("qid").crossJoin(F.broadcast(legs)),
+        5,
+        ["prefilter", "qid"],
     )
     return perq.groupBy("prefilter").agg(
         F.count("*").cast("long").alias("n_queries"),
@@ -601,26 +552,15 @@ def emb_matryoshka_prefix_recall(
             F.col("cd.qid").alias("qid"),
             F.col("cd.vec_id").alias("vec_id"),
             rnd(
-                F.when(
-                    F.col("nq.cn") * F.col("nv.cn") == 0, F.lit(0.0)
-                ).otherwise(
-                    F.col("cd.dot") / F.sqrt(F.col("nq.cn") * F.col("nv.cn"))
+                safe_div(
+                    F.col("cd.dot"), F.sqrt(F.col("nq.cn") * F.col("nv.cn"))
                 ),
                 4,
             ).alias("s"),
         )
     )
-    rtop = (
-        sim.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("lvl", "qid").orderBy(
-                    F.desc("s"), "vec_id"
-                )
-            ),
-        )
-        .where(F.col("rank") <= 5)
-        .select("lvl", "qid", "vec_id")
+    rtop = top_k(sim, ["lvl", "qid"], [F.desc("s"), "vec_id"], 5).select(
+        "lvl", "qid", "vec_id"
     )
     # hits via a window flag, not rtop ⋈ rtop(lvl=64): the self-join
     # diamond would re-expand the whole pair lineage per consumer in
@@ -819,16 +759,7 @@ def emb_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.bit_count(F.expr("a.sig_hi ^ c.sig_hi"))
         ).cast("int").alias("hamming"),
     )
-    knn1 = (
-        ham.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy("hamming", "dst")
-            ),
-        )
-        .where(F.col("rank") <= 3)
-        .select("src", "dst")
-    )
+    knn1 = top_k(ham, "src", ["hamming", "dst"], 3).select("src", "dst")
     k1, k2 = knn1.alias("k1"), knn1.alias("k2")
     hops = k1.join(k2, F.col("k2.src") == F.col("k1.dst")).where(
         F.col("k2.dst") != F.col("k1.src")
@@ -846,35 +777,11 @@ def emb_nndescent_round(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(cosine(F.col("qv"), F.col("dv")), 4).alias("sim"),
         )
     )
-    r2top = (
-        rs.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("sim"), "dst")
-            ),
-        )
-        .where(F.col("rank") <= 3)
-        .select("src", "dst")
-    )
+    r2top = top_k(rs, "src", [F.desc("sim"), "dst"], 3).select("src", "dst")
     qs = eq.where(F.col("src") % 50 == 0)
-    ex = (
-        emb.join(F.broadcast(qs), F.col("vec_id") != F.col("src"))
-        .select(
-            "src",
-            F.col("vec_id").alias("dst"),
-            rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"),
-        )
-    )
-    etop = (
-        ex.withColumn(
-            "rank",
-            F.row_number().over(
-                Window.partitionBy("src").orderBy(F.desc("sim"), "dst")
-            ),
-        )
-        .where(F.col("rank") <= 3)
-        .select("src", "dst")
-    )
+    etop = exact_topk(
+        emb, qs.withColumnRenamed("src", "qid"), cosine(F.col("qv"), F.col("v")), 3
+    ).select(F.col("qid").alias("src"), F.col("vec_id").alias("dst"))
     h1 = (
         knn1.where(F.col("src") % 50 == 0)
         .join(etop, ["src", "dst"])

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
-from python_kinesis_streaming_spark.llm.similarity import cosine
+from python_kinesis_streaming_spark.llm.similarity import cosine, exact_topk
 from python_kinesis_streaming_spark.registry import op
 from python_kinesis_streaming_spark.sources.tables import load_table
 
@@ -278,19 +278,10 @@ def sim_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.where(F.col("vec_id") % 50 == 0).select(
         F.col("vec_id").alias("qid"), F.col("v").alias("qv")
     )
-    relr = emb.join(F.broadcast(q), F.col("vec_id") != F.col("qid")).select(
-        "qid",
-        "vec_id",
-        rnd(cosine(F.col("qv"), F.col("v")), 4).alias("rel"),
+    cand = exact_topk(emb, q, cosine(F.col("qv"), F.col("v")), 20).select(
+        "qid", "vec_id", F.col("sim").alias("rel")
     )
     wq = Window.partitionBy("qid")
-    cand = (
-        relr.withColumn(
-            "rn", F.row_number().over(wq.orderBy(F.desc("rel"), "vec_id"))
-        )
-        .where(F.col("rn") <= 20)
-        .select("qid", "vec_id", "rel")
-    )
     ca = cand.select("qid", F.col("vec_id").alias("a"))
     cb = cand.select("qid", F.col("vec_id").alias("b"))
     ea = emb.select(F.col("vec_id").alias("a"), F.col("v").alias("va"))

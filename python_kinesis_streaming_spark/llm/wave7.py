@@ -40,7 +40,7 @@ from pyspark.sql.window import Window
 
 from python_kinesis_streaming_spark.functions.rounding import rnd, sql_rnd
 from python_kinesis_streaming_spark.registry import op
-from python_kinesis_streaming_spark.sources.tables import load_table
+from python_kinesis_streaming_spark.sources.tables import _session_key, load_table
 
 
 # ---------------------------------------------------------------------------
@@ -84,7 +84,7 @@ _SEMDEDUP_CTES = """
 #: The assignment subtree feeds BOTH sides of the pair self-join across
 #: five ops — caching computes the broadcast-centroid argmin once per
 #: session (the emb_with_norm pattern, llm/similarity.py).
-_ASSIGNED_CACHE: dict[tuple[int, str], DataFrame] = {}
+_ASSIGNED_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 
 def _semdedup_assigned_pairs(
@@ -92,15 +92,17 @@ def _semdedup_assigned_pairs(
 ) -> tuple[DataFrame, DataFrame]:
     """(assigned, pairs): cell id per vector + within-cell cosine pairs.
 
-    The pair similarity is dot(a,b)/(norm_a*norm_b) with the norms
-    precomputed ONCE per vector — the identical arithmetic to the
-    ``cosine`` helper (same index-order dot, same sqrt-product), so the
-    doubles are bit-identical, but the per-pair cost drops from three
-    interpreted HOFs (zip_with dot + two norms) to one (measured 8.5x
-    on the x3 synthetic: 31 s → 3.7 s for the pair stage)."""
-    from python_kinesis_streaming_spark.llm.similarity import dot, l2norm
+    The pair similarity is ``cosine_of`` over norms precomputed ONCE per
+    vector: the per-pair cost drops from three interpreted HOFs (zip_with
+    dot + two norms) to one (measured 8.5x on the x3 synthetic: 31 s →
+    3.7 s for the pair stage)."""
+    from python_kinesis_streaming_spark.llm.similarity import (
+        cosine_of,
+        dot,
+        l2norm,
+    )
 
-    key = (id(spark), sf_dir)
+    key = (_session_key(spark), sf_dir)
     if key not in _ASSIGNED_CACHE:
         emb = load_table(spark, sf_dir, "embeddings")
         cent = emb.where(F.col("vec_id") < 8).select(
@@ -150,8 +152,11 @@ def _semdedup_assigned_pairs(
         F.col("a.vec_id").alias("va"),
         F.col("b.vec_id").alias("vb"),
         rnd(
-            dot(F.col("a.embedding"), F.col("b.embedding"))
-            / (F.col("a.norm") * F.col("b.norm")),
+            cosine_of(
+                dot(F.col("a.embedding"), F.col("b.embedding")),
+                F.col("a.norm"),
+                F.col("b.norm"),
+            ),
             4,
         ).alias("sim"),
     )

@@ -4263,8 +4263,7 @@ def txn_exactly_once_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Formula-centroid IVF: assign → probe 2 lists → top-5 cosine."""
     from python_kinesis_streaming_spark.functions.rounding import rnd
-    from python_kinesis_streaming_spark.llm.similarity import cosine
-    from pyspark.sql import Window
+    from python_kinesis_streaming_spark.llm.similarity import cosine, top_k
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
@@ -4317,12 +4316,8 @@ def sim_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
             rnd(cosine(F.col("qv"), F.col("v")), 4).alias("sim"),
         )
     )
-    w = Window.partitionBy("qid").orderBy(
-        F.col("sim").desc(), F.col("vec_id")
-    )
     return (
-        cand.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 5)
+        top_k(cand, "qid", [F.desc("sim"), "vec_id"], 5, "rank")
         .select(
             F.col("qid").cast("long"),
             F.col("rank").cast("int"),

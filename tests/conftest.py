@@ -91,4 +91,7 @@ def plan_corpus(spark, sf_dir):
         else:
             os.environ["SPARK_GRAFT_NO_TABLE_CACHE"] = prev
         _tables._CACHE.clear()  # later tests re-cache lazily
+        # ops that .cache() at build time leave CacheManager entries; drop
+        # them so later plan pins never depend on where the corpus built
+        spark.catalog.clearCache()
     return corpus

@@ -118,11 +118,12 @@ def test_representative_split_is_complete():
     assert sorted(_PURE_REPR + _SEQ_REPR) == sorted(REPRESENTATIVE)
 
 
-# The round-4 streaming oracles (stream_watermark_late, stream_output_modes,
-# join_stream_stream_outer, multimodal_decode) model batch boundaries and
-# watermark cutoffs as size-parametric SQL (n, ceil(n/4), 0.3n computed in
-# the query). Calibrated at sf0.01 — verify the model generalizes by running
-# the FULL oracle comparison at sf0.001 too.
+# The round-4 oracles, calibrated at sf0.01 — verify they generalize by
+# running the FULL oracle comparison at sf0.001 too. Only two model batch
+# structure as size-parametric SQL: the stream_output_modes update leg
+# (ceil(n/4)-row chunk boundaries) and stream_watermark_late (0.3n late-row
+# injection). join_stream_stream_outer models only the final watermark
+# cutoff; multimodal_decode is a plain per-document projection.
 ROUND4_ORACLED = [
     "stream_watermark_late",
     "stream_output_modes",

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import datetime
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 
 from pyspark.sql import functions as F
 
@@ -101,22 +101,24 @@ def test_dedup_exact_property(spark, rows):
         max_size=12,
     )
 )
+@example(vecs=[[0.5, -0.25, 0.0, 1.0], [0.0] * 4, [1.0, 0.5, 0.0, -1.0]])
+@example(vecs=[[0.0] * 4, [1.0, 0.5, 0.0, -1.0], [0.0] * 4])
 @_SETTINGS
 def test_knn_matches_numpy(spark, vecs):
-    """api.knn_cosine ranking == numpy cosine ranking (modulo exact ties)."""
+    """api.knn_cosine ranking == numpy cosine ranking (modulo exact ties);
+    a pair with a zero vector (norm product 0) scores 0.0."""
     import numpy as np
 
     a = np.array(vecs, dtype=np.float64)
     norms = np.linalg.norm(a, axis=1)
-    if norms[0] == 0 or (norms[1:] == 0).any():
-        return  # cosine undefined for zero vectors — out of contract
     df = spark.createDataFrame(
         [(i, [float(x) for x in v]) for i, v in enumerate(vecs[1:], start=1)],
         "vid long, v array<float>",
     )
     got = api.knn_cosine(df, "v", vecs[0], k=len(vecs)).collect()
     sims = {r.vid: r.sim for r in got}
-    ref = (a[1:] @ a[0]) / (norms[1:] * norms[0])
+    nprod = norms[1:] * norms[0]
+    ref = np.divide(a[1:] @ a[0], nprod, out=np.zeros_like(nprod), where=nprod != 0)
     for i, expected in enumerate(ref, start=1):
         # float32 storage on the Spark side vs float64 numpy: tolerance.
         assert abs(sims[i] - expected) < 1e-5
